@@ -1,6 +1,7 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.model.{FifoConfig, PriorityConfig, SimConfig}
 import graft.sim.SimOperator
@@ -67,12 +68,9 @@ object Main {
             return
         }
 
-      val total = requests.count()
-      if (total == 0) {
-        println("No request data in CSV; nothing to simulate.")
-        return
-      }
-
+      // Counted inside the job that reads the requests, not by a job of its own.
+      val input = Observation("input")
+      val observed = requests.observe(input, count(lit(1)).as("rows"))
       val cfg = SimConfig(
         numWorkers = numWorkers,
         strategy = if (useFifo) FifoConfig(queueSize) else PriorityConfig()
@@ -87,7 +85,7 @@ object Main {
           // pacing (tests).
           val sleepMs =
             sys.env.get("GRAFT_ANIMATION_SLEEP").map(_.toDouble).getOrElse(1.0 / 1440 * 1000)
-          val rows = requests.collect()
+          val rows = observed.collect()
           val out = graft.sim.SimCore
             .runFixedStep(cfg, rows.iterator, interval = 1.0, onFrame = f => {
               println(
@@ -99,13 +97,13 @@ object Main {
             .toSeq
           import spark.implicits._
           spark.createDataset(out)
-        } else SimOperator.simulate(requests, cfg)
-      val completedDF = Statistics.toDF(completed).cache()
-      val s = Statistics.summary(completedDF).collect()(0)
-      val usage = Statistics
-        .apiUsage(completedDF, cfg.numApis)
-        .orderBy("api_id")
-        .collect()
+        } else SimOperator.simulate(observed, cfg)
+      val s = Statistics.report(Statistics.toDF(completed), cfg.numApis).collect()(0)
+      val total = input.get("rows").asInstanceOf[Long]
+      if (total == 0) {
+        println("No request data in CSV; nothing to simulate.")
+        return
+      }
 
       def fmt(d: Double): String = if (d.isNaN) "N/A" else f"$d%.4f"
       println("\n--- Simulation statistics ---")
@@ -118,7 +116,7 @@ object Main {
       println(s"  Queuing time P90:        ${fmt(s.getAs[Double]("p90"))}")
       println(s"  Queuing time P99:        ${fmt(s.getAs[Double]("p99"))}")
       println("\n  --- API usage ---")
-      usage.foreach(r => println(s"    ${r.getAs[String]("api_id")}: ${r.getAs[Long]("n_used")}"))
+      (1 to cfg.numApis).foreach(k => println(s"    api_$k: ${s.getAs[Long](s"api_$k")}"))
       println("\n  --- Queue totals (enqueued) ---")
       println(s"    priority: ${s.getAs[Long]("priority_queue_enqueued_total")}")
       println(s"    normal:   ${s.getAs[Long]("normal_queue_enqueued_total")}")

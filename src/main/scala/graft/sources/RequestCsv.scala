@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.model.SimRequest
 
@@ -12,8 +11,8 @@ import graft.model.SimRequest
   *   - header must contain `user_id,request_time,processing_time`; a
   *     missing column fails naming it (KeyError analogue, :37-40)
   *   - `request_time` is ISO-8601; trailing `Z` normalizes to UTC (:50-53)
-  *   - malformed timestamp / float fails with the 1-based data row number
-  *     (ValueError analogue, :42,69-70)
+  *   - malformed or empty timestamp / float fails with the 1-based data
+  *     row number (ValueError analogue, :42,69-70)
   *   - header-only file → empty dataset, no error
   *
   * Parse runs distributed (typed casts in a projection); the row-numbered
@@ -28,7 +27,12 @@ object RequestCsv {
 
   implicit private val reqEnc: Encoder[SimRequest] = Encoders.product[SimRequest]
 
-  def read(spark: SparkSession, path: String): Dataset[SimRequest] = {
+  /** The parse both readers share: the raw text columns, the typed `ts` and
+    * `proc`, the file-order `seq`, and a `reason` that is null when the row
+    * parses. An empty field reads as null and is malformed too: the
+    * reference's `fromisoformat('')` and `float('')` raise ValueError.
+    */
+  private def parse(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read
       .option("header", "true")
       .csv(path)
@@ -41,28 +45,48 @@ object RequestCsv {
     // Normalize trailing Z, parse both zoned and naive ISO-8601 (the
     // reference accepts no-Z values as naive local = UTC here, :54-59).
     val tsStr = regexp_replace(col("request_time"), "Z$", "+00:00")
-    val parsed = raw.select(
-      col("user_id"),
-      col("request_time").as("raw_ts"),
-      col("processing_time").as("raw_proc"),
-      // try_* variants: ANSI mode (Spark 4 default) would otherwise throw
-      // mid-task; the reference contract wants a row-numbered error instead.
-      coalesce(
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss")),
-        // Lenient ISO-8601 fallback for 1-5 fractional digits
-        // (fromisoformat on Python >= 3.11 accepts them, :50-53).
-        try_to_timestamp(tsStr)
-      ).as("ts"),
-      expr("try_cast(processing_time AS DOUBLE)").as("proc"),
-      monotonically_increasing_id().as("seq")
-    )
+    raw
+      .select(
+        col("user_id"),
+        col("request_time").as("raw_ts"),
+        col("processing_time").as("raw_proc"),
+        // try_* variants: ANSI mode (Spark 4 default) would otherwise throw
+        // mid-task; the reference contract wants a row-numbered error instead.
+        coalesce(
+          try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
+          try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
+          try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
+          try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss")),
+          // Lenient ISO-8601 fallback for 1-5 fractional digits
+          // (fromisoformat on Python >= 3.11 accepts them, :50-53).
+          try_to_timestamp(tsStr)
+        ).as("ts"),
+        expr("try_cast(processing_time AS DOUBLE)").as("proc"),
+        monotonically_increasing_id().as("seq")
+      )
+      .withColumn(
+        "reason",
+        when(col("ts").isNull, "malformed_timestamp")
+          .when(col("proc").isNull, "malformed_float")
+      )
+  }
 
+  /** The typed requests of rows whose `reason` is null. */
+  private def typed(parsed: DataFrame): Dataset[SimRequest] =
+    parsed
+      .select(
+        col("user_id").as("userId"),
+        unix_micros(col("ts")).as("requestTimeMicros"),
+        col("proc").as("processingTime"),
+        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
+        col("seq")
+      )
+      .as[SimRequest]
+
+  def read(spark: SparkSession, path: String): Dataset[SimRequest] = {
+    val parsed = parse(spark, path)
     val bad = parsed
-      .filter((col("ts").isNull && col("raw_ts").isNotNull) ||
-        (col("proc").isNull && col("raw_proc").isNotNull))
+      .filter(col("reason").isNotNull)
       .orderBy("seq")
       .limit(1)
       .collect()
@@ -75,21 +99,16 @@ object RequestCsv {
       // Only computed on the failure path.
       val rowNo = parsed.filter(col("seq") <= r.getAs[Long]("seq")).count()
       val what =
-        if (r.isNullAt(r.fieldIndex("ts"))) s"timestamp '${r.getAs[String]("raw_ts")}'"
-        else s"float '${r.getAs[String]("raw_proc")}'"
+        if (r.getAs[String]("reason") == "malformed_timestamp") s"timestamp '${text(r, "raw_ts")}'"
+        else s"float '${text(r, "raw_proc")}'"
       throw CsvParseException(s"Malformed $what at data row $rowNo")
     }
-
-    parsed
-      .select(
-        col("user_id").as("userId"),
-        unix_micros(col("ts")).as("requestTimeMicros"),
-        col("proc").as("processingTime"),
-        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
-        col("seq")
-      )
-      .as[SimRequest]
+    typed(parsed)
   }
+
+  /** A raw field as the file has it: an empty field reads as null. */
+  private def text(r: Row, field: String): String =
+    Option(r.getAs[String](field)).getOrElse("")
 
   /** LENIENT lake-ingest variant of the same contract: instead of failing
     * the job on the first malformed row (the reference's interactive-CLI
@@ -100,52 +119,19 @@ object RequestCsv {
     *
     * Returns (clean, quarantined): `clean` carries the typed rows;
     * `quarantined` carries the raw columns plus a `reason`. The split is
-    * one pass — the same try_-cast projection, routed by nullness — and
+    * one pass — the projection [[read]] validates, routed by `reason` — and
     * entirely distributed (no driver-side failure probe).
     */
   def readLenient(spark: SparkSession, path: String): (Dataset[SimRequest], DataFrame) = {
-    val raw = spark.read
-      .option("header", "true")
-      .csv(path)
-    val required = Seq("user_id", "request_time", "processing_time")
-    val missing = required.filterNot(raw.columns.contains)
-    if (missing.nonEmpty)
-      throw CsvParseException(s"CSV is missing required column(s): ${missing.mkString(", ")}")
-
-    val tsStr = regexp_replace(col("request_time"), "Z$", "+00:00")
-    val parsed = raw.select(
-      col("user_id"),
-      col("request_time").as("raw_ts"),
-      col("processing_time").as("raw_proc"),
-      coalesce(
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss")),
-        try_to_timestamp(tsStr)
-      ).as("ts"),
-      expr("try_cast(processing_time AS DOUBLE)").as("proc"),
-      monotonically_increasing_id().as("seq")
-    )
-    val badTs = col("ts").isNull && col("raw_ts").isNotNull
-    val badProc = col("proc").isNull && col("raw_proc").isNotNull
-    val clean = parsed
-      .filter(!badTs && !badProc)
-      .select(
-        col("user_id").as("userId"),
-        unix_micros(col("ts")).as("requestTimeMicros"),
-        col("proc").as("processingTime"),
-        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
-        col("seq")
-      )
-      .as[SimRequest]
+    val parsed = parse(spark, path)
+    val clean = typed(parsed.filter(col("reason").isNull))
     val quarantined = parsed
-      .filter(badTs || badProc)
+      .filter(col("reason").isNotNull)
       .select(
         col("user_id"),
         col("raw_ts").as("request_time"),
         col("raw_proc").as("processing_time"),
-        when(badTs, "malformed_timestamp").otherwise("malformed_float").as("reason")
+        col("reason")
       )
     (clean, quarantined)
   }

@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.SimCompleted
@@ -52,22 +52,38 @@ object Statistics {
       col("start_time") - col("arrival_time_in_queue")
     )
 
-  /** One-row summary (src/statistics.py:102-121,144-152): counts, mean and
-    * exact linear-interpolation percentiles of queuing time, per-queue
-    * enqueue totals. A single agg ⇒ one shuffle of partial buffers.
+  /** Per-row inputs of every aggregate below. */
+  private def prepared(completedDF: DataFrame, keep: Seq[Column] = Nil): DataFrame =
+    completedDF.select(
+      keep ++ Seq(
+        processedPred.as("is_processed"),
+        queuingTime.as("qt"),
+        col("queue"),
+        col("used_api_id")
+      ): _*
+    )
+
+  /** One exact linear-interpolation percentile buffer for all four
+    * quantiles. The four `p` columns repeat the same aggregate expression,
+    * which Spark evaluates once per group.
     */
-  private def summaryAggs: Seq[org.apache.spark.sql.Column] = {
+  private def quantiles: Column =
+    percentile(col("qt"), array(Seq(0.5, 0.75, 0.9, 0.99).map(lit): _*))
+
+  /** Summary columns (src/statistics.py:102-121,144-152): counts, mean and
+    * percentiles of queuing time, per-queue enqueue totals.
+    */
+  private def summaryAggs: Seq[Column] = {
     val nan = lit(Double.NaN)
     Seq(
       sum(when(col("is_processed"), 1L).otherwise(0L)).cast("long")
         .as("total_requests_processed"),
       sum(when(!col("is_processed"), 1L).otherwise(0L)).cast("long")
         .as("total_requests_rejected"),
-      coalesce(avg(col("qt")), nan).as("average_queuing_time"),
-      coalesce(expr("percentile(qt, 0.50)"), nan).as("p50"),
-      coalesce(expr("percentile(qt, 0.75)"), nan).as("p75"),
-      coalesce(expr("percentile(qt, 0.90)"), nan).as("p90"),
-      coalesce(expr("percentile(qt, 0.99)"), nan).as("p99"),
+      coalesce(avg(col("qt")), nan).as("average_queuing_time")
+    ) ++ Seq("p50", "p75", "p90", "p99").zipWithIndex.map { case (name, i) =>
+      coalesce(quantiles(i), nan).as(name)
+    } ++ Seq(
       sum(when(col("queue") === "priority", 1L).otherwise(0L)).cast("long")
         .as("priority_queue_enqueued_total"),
       sum(when(col("queue") === "normal", 1L).otherwise(0L)).cast("long")
@@ -75,57 +91,46 @@ object Statistics {
     )
   }
 
+  /** Per-endpoint processed counts (A4, src/statistics.py:126-141), one
+    * `api_k` column per endpoint k = 1..numApis: rows with no API id or an
+    * out-of-domain one count nowhere, absent endpoints count 0.
+    */
+  private def usageAggs(numApis: Int): Seq[Column] =
+    (1 to numApis).map(k =>
+      count_if(col("is_processed") && col("used_api_id") === k).as(s"api_$k"))
+
+  /** One-row summary. A single aggregate ⇒ one shuffle of partial buffers. */
   def summary(completedDF: DataFrame): DataFrame =
-    completedDF
-      .select(
-        processedPred.as("is_processed"),
-        queuingTime.as("qt"),
-        col("queue")
-      )
-      .agg(summaryAggs.head, summaryAggs.tail: _*)
+    prepared(completedDF).agg(summaryAggs.head, summaryAggs.tail: _*)
 
   /** Per-group summary (e.g. per scenario of a fan-out run) — the same
     * one-pass aggregate with a grouping key; scales to any number of
     * concurrent scenarios with a single shuffle.
     */
   def summaryByGroup(completedDF: DataFrame, groupCols: Seq[String]): DataFrame =
-    completedDF
-      .select(
-        groupCols.map(col) ++ Seq(
-          processedPred.as("is_processed"),
-          queuingTime.as("qt"),
-          col("queue")
-        ): _*
-      )
+    prepared(completedDF, groupCols.map(col))
       .groupBy(groupCols.map(col): _*)
       .agg(summaryAggs.head, summaryAggs.tail: _*)
 
-  /** Per-endpoint usage with dense-domain zero-fill (A4,
-    * src/statistics.py:126-141): only processed rows with an in-domain id
-    * count; the `api_1..api_N` key dimension is generated and broadcast so
-    * absent endpoints appear with count 0.
+  /** Per-endpoint usage as `(api_id, n_used)` rows in endpoint order,
+    * zero-filled: the [[usageAggs]] row unpivoted. The unpivot is a
+    * generator, not `Dataset.unpivot`: a generator keeps the aggregate's
+    * single partition, so sorting the rows needs no exchange.
     */
   def apiUsage(completedDF: DataFrame, numApis: Int): DataFrame = {
-    val spark = completedDF.sparkSession
-    val domain = spark
-      .range(1, numApis + 1L)
-      .select(col("id").cast("int").as("api_id_num"))
-    val counts = completedDF
-      .filter(
-        processedPred && col("used_api_id").isNotNull &&
-          col("used_api_id").between(1, numApis)
-      )
-      .groupBy(col("used_api_id").as("api_id_num"))
-      .agg(count(lit(1)).as("cnt"))
-    // Hint-free: both sides are ≤ numApis rows; AQE picks the build side
-    // (the preserved side of a left join cannot be the broadcast build
-    // side, so only the counts side is eligible anyway).
-    domain
-      .join(counts, Seq("api_id_num"), "left")
-      .select(
-        concat(lit("api_"), col("api_id_num")).as("api_id"),
-        coalesce(col("cnt"), lit(0L)).as("n_used")
-      )
+    val counts = usageAggs(numApis)
+    prepared(completedDF)
+      .agg(counts.head, counts.tail: _*)
+      .select(inline(array((1 to numApis).map(k =>
+        struct(lit(s"api_$k").as("api_id"), col(s"api_$k").as("n_used"))): _*)))
+  }
+
+  /** The CLI report in one row: the [[summary]] columns followed by the
+    * `api_1..api_N` counts [[apiUsage]] unpivots, in one aggregate.
+    */
+  def report(completedDF: DataFrame, numApis: Int): DataFrame = {
+    val aggs = summaryAggs ++ usageAggs(numApis)
+    prepared(completedDF).agg(aggs.head, aggs.tail: _*)
   }
 
   /** A5 enqueue totals in long format (reference counter semantics:

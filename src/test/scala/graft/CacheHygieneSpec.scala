@@ -1,5 +1,8 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, PrintStream}
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.graftbridge.SqlBridge
@@ -45,6 +48,20 @@ class CacheHygieneSpec extends AnyFunSuite {
     val pairs = Winnow.overlapPairs(Tables.documents(spark, sfDir))
     assert(pairs.count() > 0)
     assertNoDfCaches("Winnow.overlapPairs")
+  }
+
+  test("cli.Main.run leaves no cached relation behind") {
+    spark.catalog.clearCache()
+    val csv = Files.createTempFile("graft_cli_cache", ".csv")
+    Files.writeString(csv,
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.000000Z,1.0
+        |u2,2023-01-01T00:00:00.500000Z,2.0
+        |""".stripMargin)
+    Console.withOut(new PrintStream(new ByteArrayOutputStream)) {
+      graft.cli.Main.run(spark, Array(csv.toString, "-w", "2"))
+    }
+    assertNoDfCaches("cli.Main.run")
   }
 
   /** r12 cost-class guard (SURVEY §7.4): both r10 (q243) and r11 (q57)

@@ -115,6 +115,36 @@ class SourcesSpec extends AnyFunSuite {
     assert(e.message.contains("float"))
   }
 
+  test("empty timestamp or float field → row-numbered error, like fromisoformat('') / float('')") {
+    val emptyTs = tmpCsv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.100000Z,1.0
+        |u2,,2.0
+        |""".stripMargin)
+    val e1 = intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, emptyTs))
+    assert(e1.message == "Malformed timestamp '' at data row 2", e1.message)
+    val emptyProc = tmpCsv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.100000Z,
+        |""".stripMargin)
+    val e2 = intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, emptyProc))
+    assert(e2.message == "Malformed float '' at data row 1", e2.message)
+  }
+
+  test("lenient ingest quarantines empty timestamp and float fields") {
+    val path = tmpCsv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.100000Z,1.0
+        |u2,,2.0
+        |u3,2023-01-01T00:00:00.300000Z,
+        |""".stripMargin)
+    val (clean, quarantined) = RequestCsv.readLenient(spark, path)
+    assert(clean.collect().map(_.userId).toSeq == Seq("u1"))
+    val q = quarantined.collect()
+      .map(r => r.getAs[String]("user_id") -> r.getAs[String]("reason")).toMap
+    assert(q == Map("u2" -> "malformed_timestamp", "u3" -> "malformed_float"))
+  }
+
   test("missing column → error naming it (test_csv_parser.py:118-121)") {
     val path = tmpCsv(
       """user_id,request_time
